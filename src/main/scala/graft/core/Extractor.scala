@@ -146,9 +146,6 @@ object Extractor {
     sawLt
   }
 
-  private val charsetPattern =
-    java.util.regex.Pattern.compile("(?i)charset\\s*=\\s*[\"']?([A-Za-z0-9_:.-]+)")
-
   /** windows-1252 — the real JVM charset, NOT ISO-8859-1: bytes 0x80–0x9F
     * are smart quotes / dashes / bullets in cp1252 but C1 controls in
     * latin-1, and a large slice of the web declares one while meaning the
@@ -162,15 +159,46 @@ object Extractor {
   def decode(bytes: Array[Byte]): String = {
     if (bytes.length >= 3 && (bytes(0) & 0xFF) == 0xEF && (bytes(1) & 0xFF) == 0xBB && (bytes(2) & 0xFF) == 0xBF)
       return new String(bytes, 3, bytes.length - 3, StandardCharsets.UTF_8)
-    val head = new String(bytes, 0, math.min(bytes.length, 1024), StandardCharsets.ISO_8859_1)
-    val m = charsetPattern.matcher(head)
+    val name = declaredCharset(bytes, math.min(bytes.length, 1024))
     val cs: Charset =
-      if (m.find()) {
-        val name = m.group(1).toLowerCase
-        if (name == "iso-8859-1" || name == "latin1" || name == "latin-1" || name == "windows-1252")
+      if (name != null) {
+        val lower = name.toLowerCase
+        if (lower == "iso-8859-1" || lower == "latin1" || lower == "latin-1" || lower == "windows-1252")
           cp1252
         else StandardCharsets.UTF_8
       } else StandardCharsets.UTF_8
     new String(bytes, cs) // CharsetDecoder default REPLACE via String ctor
+  }
+
+  /** The label of the first `charset\s*=\s*["']?([A-Za-z0-9_:.-]+)` in
+    * bytes[0, limit), matched case-insensitively for ASCII letters only,
+    * with `\s` = [ \t\n\x0B\f\r]; null when there is none. A `charset`
+    * without a label after it does not end the search, and the label is
+    * cut at `limit`. */
+  private def declaredCharset(bytes: Array[Byte], limit: Int): String = {
+    def isSpace(b: Byte): Boolean =
+      b == ' ' || b == '\t' || b == '\n' || b == 0x0B || b == '\f' || b == '\r'
+    def isLabel(b: Byte): Boolean =
+      (b >= 'a' && b <= 'z') || (b >= 'A' && b <= 'Z') || (b >= '0' && b <= '9') ||
+        b == '_' || b == ':' || b == '.' || b == '-'
+    var p = 0
+    while (p + 9 <= limit) { // "charset=x" is the shortest match
+      if ((bytes(p) | 0x20) == 'c' && (bytes(p + 1) | 0x20) == 'h' && (bytes(p + 2) | 0x20) == 'a' &&
+          (bytes(p + 3) | 0x20) == 'r' && (bytes(p + 4) | 0x20) == 's' && (bytes(p + 5) | 0x20) == 'e' &&
+          (bytes(p + 6) | 0x20) == 't') {
+        var i = p + 7
+        while (i < limit && isSpace(bytes(i))) i += 1
+        if (i < limit && bytes(i) == '=') {
+          i += 1
+          while (i < limit && isSpace(bytes(i))) i += 1
+          if (i < limit && (bytes(i) == '"' || bytes(i) == '\'')) i += 1
+          val start = i
+          while (i < limit && isLabel(bytes(i))) i += 1
+          if (i > start) return new String(bytes, start, i - start, StandardCharsets.ISO_8859_1)
+        }
+      }
+      p += 1
+    }
+    null
   }
 }

@@ -181,16 +181,85 @@ object TextAssembler {
     (sb.toString, spans.result())
   }
 
-  /** End-to-end assembly of classified blocks for the HTML branch. */
+  /** End-to-end assembly of classified blocks for the HTML branch: the same
+    * (text, spans) as [[assemble]] over each block's [[normalizeBlock]]
+    * (then [[bidiVisual]] for RTL languages), blocks that normalize to
+    * empty dropped. Non-RTL blocks normalize straight into one output
+    * buffer, with no string built per block. */
   def assembleBlocks(
       classified: Seq[(Block, String)],
       cfg: ExtractorConfig,
       lang: String): (String, Vector[Span]) = {
     val rtl = cfg.rtlLangs.contains(lang)
-    val pieces = classified.iterator.map { case (b, kind) =>
-      val norm = normalizeBlock(b.text)
-      (if (rtl) bidiVisual(norm, rtlBase = true) else norm, kind)
-    }.filter(_._1.nonEmpty).toVector
-    assemble(pieces)
+    var capacity = 1
+    classified.foreach { case (b, _) => capacity += b.text.length + 2 }
+    val out = new Output(capacity)
+    val spans = Vector.newBuilder[Span]
+    classified.foreach { case (b, kind) =>
+      val mark = out.length
+      if (mark > 0) { out.put('\n'); out.put('\n') }
+      val begin = out.length
+      if (rtl) out.put(bidiVisual(normalizeBlock(b.text), rtlBase = true))
+      else normalizeBlockInto(out, b.text)
+      if (out.length == begin) out.length = mark
+      else spans += Span(begin, out.length, kind)
+    }
+    if (out.length == 0) return ("", Vector.empty)
+    out.put('\n')
+    (out.result, spans.result())
+  }
+
+  /** One document's assembled text: a char array sized for the blocks'
+    * raw text, grown only when ligatures expand it. */
+  private final class Output(capacity: Int) {
+    private var chars = new Array[Char](capacity)
+    var length = 0
+    private var started = false
+    private var pendingSpace = false
+
+    def put(c: Char): Unit = {
+      if (length == chars.length) chars = java.util.Arrays.copyOf(chars, length * 2)
+      chars(length) = c
+      length += 1
+    }
+
+    def put(s: String): Unit = {
+      var i = 0
+      while (i < s.length) { put(s.charAt(i)); i += 1 }
+    }
+
+    def startBlock(): Unit = { started = false; pendingSpace = false }
+
+    /** [[normalizeBlock]]'s whitespace rule: runs collapse to one space,
+      * none leading or trailing. */
+    def emit(c: Char): Unit =
+      if ((c > ' ' && c < '\u0080') || !Character.isWhitespace(c)) {
+        if (pendingSpace) { put(' '); pendingSpace = false }
+        put(c)
+        started = true
+      } else if (started) pendingSpace = true
+
+    def result: String = new String(chars, 0, length)
+  }
+
+  /** [[normalizeBlock]] of `s`, written to `out`. */
+  private def normalizeBlockInto(out: Output, s: String): Unit = {
+    out.startBlock()
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c < '\u00A0') out.emit(c) // below every char the normalization rewrites
+      else c match {
+        case '\u00AD' | '\u200B' | '\u200C' | '\u200D' | '\uFEFF' => // stripped
+        case '\uFB00' => out.emit('f'); out.emit('f')
+        case '\uFB01' => out.emit('f'); out.emit('i')
+        case '\uFB02' => out.emit('f'); out.emit('l')
+        case '\uFB03' => out.emit('f'); out.emit('f'); out.emit('i')
+        case '\uFB04' => out.emit('f'); out.emit('f'); out.emit('l')
+        case '\u00A0' | '\u202F' | '\u2009' => out.emit(' ')
+        case other => out.emit(other)
+      }
+      i += 1
+    }
   }
 }

@@ -1,6 +1,7 @@
 package graft.core.html
 
 import graft.core.Block
+import graft.core.html.HtmlTokenizer.isSpace
 import scala.collection.mutable.ArrayBuffer
 
 /** Token stream → candidate text blocks.
@@ -25,22 +26,11 @@ import scala.collection.mutable.ArrayBuffer
   */
 object BlockSegmenter {
 
-  private val blockTags = Set(
-    "p", "div", "section", "article", "main", "aside", "nav", "header",
-    "footer", "h1", "h2", "h3", "h4", "h5", "h6", "ul", "ol", "li",
-    "table", "thead", "tbody", "tfoot", "tr", "td", "th", "blockquote",
-    "pre", "figure", "figcaption", "form", "fieldset", "dl", "dt", "dd",
-    "address", "hr", "body", "html", "head")
-
-  private val boilerContainerTags = Set("nav", "header", "footer", "aside", "form")
-
   /** id/class substrings that mark a container as boilerplate — the
     * readability/trafilatura-class heuristic. */
   private val boilerIdClass =
     java.util.regex.Pattern.compile(
       "(?i)\\b(comment|sidebar|side-bar|footer|header|navbar|nav|menu|related|share|social|widget|promo|advert|ad-|banner|breadcrumb|cookie|subscribe|newsletter|pagination|masthead)")
-
-  private val headingTags = Set("h1", "h2", "h3", "h4", "h5", "h6")
 
   /** Elements allowed inside <head>: anything ELSE implicitly closes an
     * open head (HTML5 optional-end-tag rule — </head> may be omitted;
@@ -50,52 +40,20 @@ object BlockSegmenter {
     "base", "basefont", "bgsound", "link", "meta", "title", "noscript",
     "noframes", "style", "script", "template")
 
-  /** Non-content subtrees skipped entirely. */
-  private val skipTags = Set("script", "style", "noscript", "textarea", "head",
-    "title", "svg", "iframe", "select", "option", "button", "datalist")
-
-  // one hash lookup per tag instead of 5-8 Set lookups (each rehashing a
-  // fresh substring) — the tag-classification bits fused into a bitmask
-  private final val FBlock = 1
-  private final val FBoilerTag = 2
-  private final val FSkip = 4
-  private final val FHeading = 8
-  private final val FLi = 16
-  private final val FVoid = 32
-  private val tagFlags: java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer]()
-    def or(name: String, bit: Int): Unit =
-      m.merge(name, Integer.valueOf(bit), (a, b) => Integer.valueOf(a | b))
-    blockTags.foreach(or(_, FBlock))
-    boilerContainerTags.foreach(or(_, FBoilerTag))
-    skipTags.foreach(or(_, FSkip))
-    headingTags.foreach(or(_, FHeading))
-    or("li", FLi)
-    HtmlTokenizer.voidElements.foreach(or(_, FVoid))
-    m
-  }
-  private val ZeroFlags = Integer.valueOf(0)
-
-  private final class OpenElem(
-      val name: String,
-      val flags: Int, // tagFlags bits | boiler-by-id/class folded into FBoilerTag
-      val anchor: Boolean) {
-    def isBlock: Boolean = (flags & FBlock) != 0
-    def boiler: Boolean = (flags & FBoilerTag) != 0
-    def skip: Boolean = (flags & FSkip) != 0
-    def heading: Boolean = (flags & FHeading) != 0
-    def li: Boolean = (flags & FLi) != 0
-  }
-
   /** Word run inside a block: [begin,end) chars, link flag, word count. */
   private final case class Run(begin: Int, end: Int, isLink: Boolean, words: Int)
 
   /** The streaming segmenter. Collect blocks, then call [[result]]. */
   final class SegmentSink(fissionMinLinkRun: Int, fissionMinTextWords: Int)
       extends HtmlTokenizer.TokenSink {
+    import TagTable.{Anchor, BlockLevel, BoilerTag, Head, Heading, Li, Skip, Void}
 
     private val blocks = new ArrayBuffer[Block](32)
-    private val stack = new ArrayBuffer[OpenElem](16)
+    // open elements: names and TagTable bits (boiler-by-id/class folded
+    // into BoilerTag), as parallel arrays
+    private var stackNames = new Array[String](16)
+    private var stackFlags = new Array[Int](16)
+    private var stackLen = 0
     private val sb = new java.lang.StringBuilder(256)
     private val linkBits = new java.util.BitSet(256)
     private var blockHasLink = false // fast path: skip BitSet when no <a> text
@@ -110,113 +68,167 @@ object BlockSegmenter {
     private var liDepthC = 0
     private var headDepthC = 0
 
-    private def tagPathNow: String = stack.iterator.filter(_.isBlock).map(_.name).mkString("/")
+    // "/"-joined open block elements; rebuilt on the first emit after a
+    // block element was pushed or popped
+    private var tagPathCache = ""
+    private var tagPathStale = false
 
-    private def push(e: OpenElem): Unit = {
-      stack += e
-      if (e.anchor) anchorDepthC += 1
-      if (e.boiler) boilerDepthC += 1
-      if (e.skip) skipDepthC += 1
-      if (e.isBlock) blockDepthC += 1
-      if (e.heading) headingDepthC += 1
-      if (e.li) liDepthC += 1
-      if (e.name == "head") headDepthC += 1
-    }
-
-    private def popFrom(idx: Int): Unit = {
-      var k = stack.length - 1
-      while (k >= idx) {
-        val e = stack(k)
-        if (e.anchor) anchorDepthC -= 1
-        if (e.boiler) boilerDepthC -= 1
-        if (e.skip) skipDepthC -= 1
-        if (e.isBlock) blockDepthC -= 1
-        if (e.heading) headingDepthC -= 1
-        if (e.li) liDepthC -= 1
-        if (e.name == "head") headDepthC -= 1
-        k -= 1
+    private def tagPath: String = {
+      if (tagPathStale) {
+        val path = new java.lang.StringBuilder
+        var k = 0
+        while (k < stackLen) {
+          if ((stackFlags(k) & BlockLevel) != 0) {
+            if (path.length > 0) path.append('/')
+            path.append(stackNames(k))
+          }
+          k += 1
+        }
+        tagPathCache = path.toString
+        tagPathStale = false
       }
-      stack.remove(idx, stack.length - idx)
+      tagPathCache
     }
 
-    private def emit(raw: String, begin: Int, end: Int, runs: Seq[Run]): Unit = {
-      val words = runs.iterator.map(_.words).sum
-      val linkWords = runs.iterator.filter(_.isLink).map(_.words).sum
+    private def adjustDepths(flags: Int, d: Int): Unit = {
+      if ((flags & Anchor) != 0) anchorDepthC += d
+      if ((flags & BoilerTag) != 0) boilerDepthC += d
+      if ((flags & Skip) != 0) skipDepthC += d
+      if ((flags & BlockLevel) != 0) { blockDepthC += d; tagPathStale = true }
+      if ((flags & Heading) != 0) headingDepthC += d
+      if ((flags & Li) != 0) liDepthC += d
+      if ((flags & Head) != 0) headDepthC += d
+    }
+
+    private def push(name: String, flags: Int): Unit = {
+      if (stackLen == stackNames.length) {
+        stackNames = java.util.Arrays.copyOf(stackNames, stackLen * 2)
+        stackFlags = java.util.Arrays.copyOf(stackFlags, stackLen * 2)
+      }
+      stackNames(stackLen) = name
+      stackFlags(stackLen) = flags
+      stackLen += 1
+      adjustDepths(flags, 1)
+    }
+
+    private def popFrom(idx: Int): Unit =
+      while (stackLen > idx) {
+        stackLen -= 1
+        adjustDepths(stackFlags(stackLen), -1)
+        stackNames(stackLen) = null
+      }
+
+    private def lastIndexOf(name: String): Int = {
+      var k = stackLen - 1
+      while (k >= 0 && stackNames(k) != name) k -= 1
+      k
+    }
+
+    private def emit(text: String, words: Int, linkWords: Int): Unit =
       blocks += Block(
-        text = raw.substring(begin, end),
+        text = text,
         words = words,
         linkWords = linkWords,
-        tagPath = tagPathNow,
+        tagPath = tagPath,
         depth = blockDepthC,
         isHeading = headingDepthC > 0,
         isLi = liDepthC > 0,
         inBoilerContainer = boilerDepthC > 0)
-    }
 
     private def flush(): Unit = {
       if (sb.length > 0) {
-        // single pass over the buffer: word runs (maximal same-link-flag
-        // word sequences) built with primitive locals — one Run allocation
-        // per run boundary, not per word, and the BitSet is consulted only
-        // when the block actually saw anchor text. An all-whitespace
-        // buffer yields no runs and skips emission (the old separate
-        // has-content pre-scan fused away).
-        val wordRuns = ArrayBuffer.empty[Run]
-        val n = sb.length
-        var i = 0
-        var runBegin = -1
-        var runEnd = 0
-        var runWords = 0
-        var runLink = false
-        while (i < n) {
-          while (i < n && Character.isWhitespace(sb.charAt(i))) i += 1
-          if (i < n) {
-            val b = i
-            var link = false
-            if (blockHasLink) {
-              while (i < n && !Character.isWhitespace(sb.charAt(i))) {
-                if (linkBits.get(i)) link = true
-                i += 1
-              }
-            } else {
-              while (i < n && !Character.isWhitespace(sb.charAt(i))) i += 1
-            }
-            if (runBegin >= 0 && runLink == link) { runWords += 1; runEnd = i }
-            else {
-              if (runBegin >= 0) wordRuns += Run(runBegin, runEnd, runLink, runWords)
-              runBegin = b; runEnd = i; runWords = 1; runLink = link
-            }
+        val raw = sb.toString
+        if (blockHasLink) flushLinked(raw)
+        else {
+          // no anchor text: every word is a text word and fission cannot
+          // fire — only the word count is needed. An all-whitespace buffer
+          // has no words and emits nothing.
+          var words = 0
+          var inWord = false
+          var i = 0
+          while (i < raw.length) {
+            val word = !isSpace(raw.charAt(i))
+            if (word && !inWord) words += 1
+            inWord = word
+            i += 1
           }
-        }
-        if (runBegin >= 0) wordRuns += Run(runBegin, runEnd, runLink, runWords)
-        if (wordRuns.nonEmpty) {
-          val raw = sb.toString
-          // fission: big link runs inside a mixed block become own blocks
-          // (wide-glyph split analog, splitWideGlyphs main/segment.c:1224-1386)
-          val bigLinkRuns = wordRuns.count(r => r.isLink && r.words >= fissionMinLinkRun)
-          val textWords = wordRuns.iterator.filterNot(_.isLink).map(_.words).sum
-          if (fissionMinLinkRun > 0 && bigLinkRuns > 0 &&
-              wordRuns.exists(r => !r.isLink) && textWords >= fissionMinTextWords) {
-            var seg = ArrayBuffer.empty[Run]
-            def flushSeg(): Unit = if (seg.nonEmpty) {
-              emit(raw, seg.head.begin, seg.last.end, seg.toSeq)
-              seg = ArrayBuffer.empty[Run]
-            }
-            wordRuns.foreach { r =>
-              if (r.isLink && r.words >= fissionMinLinkRun) {
-                flushSeg()
-                emit(raw, r.begin, r.end, Seq(r))
-              } else seg += r
-            }
-            flushSeg()
-          } else if (wordRuns.nonEmpty) {
-            emit(raw, 0, raw.length, wordRuns.toSeq)
-          }
+          if (words > 0) emit(raw, words, 0)
         }
         sb.setLength(0)
         if (blockHasLink) { linkBits.clear(); blockHasLink = false }
       }
       pendingBr = 0
+    }
+
+    /** A block that saw anchor text, as word runs: a word is a link word
+      * when any of its chars came from inside an <a>, and a run is a
+      * maximal sequence of words with the same link flag. */
+    private def flushLinked(raw: String): Unit = {
+      val runs = ArrayBuffer.empty[Run]
+      val n = raw.length
+      var i = 0
+      var runBegin = -1
+      var runEnd = 0
+      var runWords = 0
+      var runLink = false
+      while (i < n) {
+        while (i < n && isSpace(raw.charAt(i))) i += 1
+        if (i < n) {
+          val b = i
+          while (i < n && !isSpace(raw.charAt(i))) i += 1
+          val bit = linkBits.nextSetBit(b)
+          val link = bit >= 0 && bit < i
+          if (runBegin >= 0 && runLink == link) { runWords += 1; runEnd = i }
+          else {
+            if (runBegin >= 0) runs += Run(runBegin, runEnd, runLink, runWords)
+            runBegin = b; runEnd = i; runWords = 1; runLink = link
+          }
+        }
+      }
+      if (runBegin >= 0) runs += Run(runBegin, runEnd, runLink, runWords)
+      var words = 0
+      var linkWords = 0
+      var bigLinkRun = false
+      var r = 0
+      while (r < runs.length) {
+        val run = runs(r)
+        words += run.words
+        if (run.isLink) {
+          linkWords += run.words
+          if (run.words >= fissionMinLinkRun) bigLinkRun = true
+        }
+        r += 1
+      }
+      val textWords = words - linkWords
+      if (fissionMinLinkRun > 0 && bigLinkRun && textWords > 0 && textWords >= fissionMinTextWords)
+        fission(raw, runs)
+      else if (words > 0) emit(raw, words, linkWords)
+    }
+
+    /** Fission: big link runs inside a mixed block become own blocks
+      * (wide-glyph split analog, splitWideGlyphs main/segment.c:1224-1386);
+      * the runs between them stay together. */
+    private def fission(raw: String, runs: ArrayBuffer[Run]): Unit = {
+      var segBegin = 0
+      var segEnd = 0
+      var segWords = 0
+      var segLinkWords = 0
+      def flushSeg(): Unit = if (segWords > 0) {
+        emit(raw.substring(segBegin, segEnd), segWords, segLinkWords)
+        segWords = 0; segLinkWords = 0
+      }
+      runs.foreach { r =>
+        if (r.isLink && r.words >= fissionMinLinkRun) {
+          flushSeg()
+          emit(raw.substring(r.begin, r.end), r.words, r.words)
+        } else {
+          if (segWords == 0) segBegin = r.begin
+          segEnd = r.end
+          segWords += r.words
+          if (r.isLink) segLinkWords += r.words
+        }
+      }
+      flushSeg()
     }
 
     private def append(piece: String, isLink: Boolean): Unit = {
@@ -235,20 +247,19 @@ object BlockSegmenter {
       } else {
         // implicit </head> (guarded by the counter — zero cost once closed)
         if (headDepthC > 0 && name != "head" && !headContentTags.contains(name)) {
-          val hi = stack.lastIndexWhere(_.name == "head")
+          val hi = lastIndexOf("head")
           if (hi >= 0) popFrom(hi)
         }
-        val flags: Int = tagFlags.getOrDefault(name, ZeroFlags)
-        if ((flags & FBlock) != 0) flush()
-        if (!selfClosing && (flags & FVoid) == 0) {
+        val flags = TagTable.flags(name)
+        if ((flags & BlockLevel) != 0) flush()
+        if (!selfClosing && (flags & Void) == 0) {
           // short-circuit: a tag-level boiler container never pays the
           // id/class regex scan
-          val boilerById = (flags & FBoilerTag) == 0 && (id != null || cls != null) && {
+          val boilerById = (flags & BoilerTag) == 0 && (id != null || cls != null) && {
             val idClass = (if (id == null) "" else id) + " " + (if (cls == null) "" else cls)
             idClass.trim.nonEmpty && boilerIdClass.matcher(idClass).find()
           }
-          push(new OpenElem(name,
-            if (boilerById) flags | FBoilerTag else flags, name == "a"))
+          push(name, if (boilerById) flags | BoilerTag else flags)
         }
         pendingBr = 0
       }
@@ -259,9 +270,9 @@ object BlockSegmenter {
       // browser tree construction (round-4 review: a never-opened </div>
       // flushed mid-paragraph, splitting one block into fragments that
       // each fell under minContentWords and were dropped)
-      val idx = stack.lastIndexWhere(_.name == name)
+      val idx = lastIndexOf(name)
       if (idx >= 0) {
-        if ((tagFlags.getOrDefault(name, ZeroFlags) & FBlock) != 0) flush()
+        if ((stackFlags(idx) & BlockLevel) != 0) flush()
         popFrom(idx)
         pendingBr = 0
       }
@@ -272,7 +283,7 @@ object BlockSegmenter {
       var hasContent = false
       var i = start
       while (!hasContent && i < end) {
-        if (!Character.isWhitespace(html.charAt(i))) hasContent = true
+        if (!isSpace(html.charAt(i))) hasContent = true
         i += 1
       }
       if (hasContent) {

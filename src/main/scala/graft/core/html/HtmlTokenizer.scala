@@ -18,9 +18,11 @@ import scala.collection.mutable.ArrayBuffer
   * character references (named subset + numeric).
   *
   * The ONE scanning implementation is [[scan]], which drives a [[TokenSink]]
-  * with ZERO per-token allocations for known tag names and text regions —
-  * the extraction kernel's hottest loop. [[tokenize]] is a collecting sink
-  * kept for tests/tools.
+  * — the extraction kernel's hottest loop. Text regions are passed as
+  * offsets and known tag names resolve to interned names with one
+  * [[TagTable]] probe, neither allocating; unknown tag names and id/class
+  * values are copied out. [[tokenize]] is a collecting sink kept for
+  * tests/tools.
   */
 object HtmlTokenizer {
 
@@ -38,56 +40,23 @@ object HtmlTokenizer {
     def text(html: String, start: Int, end: Int): Unit
   }
 
-  private val rawTextElements = Set("script", "style", "noscript", "textarea", "title")
+  /** `Character.isWhitespace`, deciding ASCII without the table lookup. */
+  private[html] def isSpace(c: Char): Boolean =
+    if (c > ' ') c >= '\u0080' && Character.isWhitespace(c)
+    else c == ' ' || (c >= '\t' && c <= '\r') || c >= '\u001c'
 
-  val voidElements: Set[String] = Set(
-    "area", "base", "br", "col", "embed", "hr", "img", "input",
-    "link", "meta", "param", "source", "track", "wbr")
+  /** `Character.isLetterOrDigit`, deciding ASCII without the table lookup. */
+  private def isNameChar(c: Char): Boolean =
+    if (c < '\u0080') (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || (c >= '0' && c <= '9')
+    else Character.isLetterOrDigit(c)
 
-  /** Interned canonical tag names — region-matched without allocation. */
-  private val knownNames: Array[String] = Array(
-    "p", "div", "section", "article", "main", "aside", "nav", "header",
-    "footer", "h1", "h2", "h3", "h4", "h5", "h6", "ul", "ol", "li",
-    "table", "thead", "tbody", "tfoot", "tr", "td", "th", "blockquote",
-    "pre", "figure", "figcaption", "form", "fieldset", "dl", "dt", "dd",
-    "address", "hr", "body", "html", "head", "a", "b", "i", "em", "strong",
-    "span", "small", "sub", "sup", "code", "label", "time", "abbr", "cite",
-    "q", "s", "u", "mark", "br", "img", "script", "style", "noscript",
-    "textarea", "title", "meta", "link", "input", "button", "select",
-    "option", "iframe", "svg", "font", "center", "wbr", "source", "video",
-    "audio", "picture", "canvas", "datalist", "base", "area", "col",
-    "embed", "param", "track", "caption", "colgroup", "details", "summary",
-    "dialog", "kbd", "samp", "var", "ins", "del", "big", "tt", "ruby")
-  // bucketed by (first-lowercased-char, length) for O(bucket) probes
-  private val nameBuckets: java.util.HashMap[Integer, Array[String]] = {
-    val m = new java.util.HashMap[Integer, ArrayBuffer[String]]()
-    knownNames.distinct.foreach { n =>
-      val k = Integer.valueOf(n.charAt(0) * 64 + n.length)
-      var b = m.get(k)
-      if (b == null) { b = ArrayBuffer.empty[String]; m.put(k, b) }
-      b += n
-    }
-    val out = new java.util.HashMap[Integer, Array[String]]()
-    m.forEach((k, v) => out.put(k, v.toArray))
-    out
-  }
-
-  /** Canonical lowercase tag name for html[start, start+len); interned for
-    * known names (no allocation), substring+toLowerCase otherwise. */
-  private def canonicalName(html: String, start: Int, len: Int): String = {
-    if (len >= 1 && len <= 10) {
-      val c0 = Character.toLowerCase(html.charAt(start))
-      val bucket = nameBuckets.get(Integer.valueOf(c0 * 64 + len))
-      if (bucket != null) {
-        var bi = 0
-        while (bi < bucket.length) {
-          val cand = bucket(bi)
-          if (html.regionMatches(true, start, cand, 0, len)) return cand
-          bi += 1
-        }
-      }
-    }
-    html.substring(start, start + len).toLowerCase
+  /** Canonical lowercase tag name for html[start, start+len) and its
+    * [[TagTable]] bits: the table's interned name for known tags (no
+    * allocation), a lowercased copy with no bits otherwise. */
+  private def canonicalName(html: String, start: Int, len: Int, res: TagResult): Unit = {
+    val e = TagTable.lookup(html, start, len)
+    if (e != null) { res.name = e.name; res.flags = e.flags }
+    else { res.name = html.substring(start, start + len).toLowerCase; res.flags = 0 }
   }
 
   /** Named character references we decode (the long tail falls through as
@@ -127,13 +96,18 @@ object HtmlTokenizer {
   def decodeEntitiesInto(sb: java.lang.StringBuilder, s: String, start: Int, end: Int): Unit = {
     var i = start
     while (i < end) {
-      val amp = s.indexOf('&', i)
-      if (amp < 0 || amp >= end) { sb.append(s, i, end); return }
+      // both searches stay inside the region: String.indexOf would scan on
+      // to the document's next '&' or ';'
+      var amp = i
+      while (amp < end && s.charAt(amp) != '&') amp += 1
+      if (amp == end) { sb.append(s, i, end); return }
       if (amp > i) sb.append(s, i, amp)
       i = amp
       val c = s.charAt(i)
-      val semi = s.indexOf(';', i + 1)
-      if (semi > i && semi < end && semi - i <= 12) {
+      val semiLimit = math.min(end, i + 13)
+      var semi = i + 1
+      while (semi < semiLimit && s.charAt(semi) != ';') semi += 1
+      if (semi < semiLimit) {
         val body = s.substring(i + 1, semi)
         // HTML5 numeric-reference policy: surrogate code points (U+D800–
         // U+DFFF) and out-of-range values map to U+FFFD — appendCodePoint
@@ -261,12 +235,12 @@ object HtmlTokenizer {
               // name = trimmed content; only letter/digit names are tags
               var s0 = lt + 2
               var e0 = end
-              while (s0 < e0 && html.charAt(s0).isWhitespace) s0 += 1
-              while (e0 > s0 && html.charAt(e0 - 1).isWhitespace) e0 -= 1
+              while (s0 < e0 && isSpace(html.charAt(s0))) s0 += 1
+              while (e0 > s0 && isSpace(html.charAt(e0 - 1))) e0 -= 1
               var ok = e0 > s0
               var k = s0
-              while (ok && k < e0) { if (!html.charAt(k).isLetterOrDigit) ok = false; k += 1 }
-              if (ok) emitEnd(canonicalName(html, s0, e0 - s0))
+              while (ok && k < e0) { if (!isNameChar(html.charAt(k))) ok = false; k += 1 }
+              if (ok) { canonicalName(html, s0, e0 - s0, tag); emitEnd(tag.name) }
               i = end + 1; textStart = i
             }
           } else if (Character.isLetter(next)) {
@@ -282,14 +256,14 @@ object HtmlTokenizer {
               // self-closing either — <title/> otherwise skipped the
               // segmenter's element push and leaked the title text into
               // content blocks (round-4 review)
-              emitStart(tag.name, tag.id, tag.cls,
-                tag.selfClosing && !rawTextElements.contains(tag.name))
+              val rawText = (tag.flags & TagTable.RawText) != 0
+              emitStart(tag.name, tag.id, tag.cls, tag.selfClosing && !rawText)
               i = after
               // raw-text elements: skip to the matching close tag.
               // HTML5 IGNORES a trailing "/" on non-void elements, so
               // <script/> still opens script data — honoring selfClosing
               // here leaked JS source into the text stream (round-3 review)
-              if (rawTextElements.contains(tag.name)) {
+              if (rawText) {
                 val name = tag.name
                 val close = indexOfCloseTag(html, i, name)
                 if (name == "title") {
@@ -316,6 +290,7 @@ object HtmlTokenizer {
   /** Per-scan mutable tag-parse result (one per scan call — thread-safe). */
   private final class TagResult {
     var name: String = null
+    var flags: Int = 0
     var id: String = null
     var cls: String = null
     var selfClosing: Boolean = false
@@ -332,7 +307,7 @@ object HtmlTokenizer {
         val after = i + 2 + nameLen
         if (after >= n) return i
         val c = html.charAt(after)
-        if (c == '>' || c.isWhitespace || c == '/') return i
+        if (c == '>' || isSpace(c) || c == '/') return i
       }
       i += 1
     }
@@ -346,16 +321,16 @@ object HtmlTokenizer {
     val n = html.length
     var i = lt + 1
     val nameStart = i
-    while (i < n && html.charAt(i).isLetterOrDigit) i += 1
+    while (i < n && isNameChar(html.charAt(i))) i += 1
     if (i == nameStart) return -1
-    val name = canonicalName(html, nameStart, i - nameStart)
+    canonicalName(html, nameStart, i - nameStart, res)
     var id: String = null
     var cls: String = null
     var selfClosing = false
     var done = false
     var ended = false
     while (!done && i < n) {
-      while (i < n && html.charAt(i).isWhitespace) i += 1
+      while (i < n && isSpace(html.charAt(i))) i += 1
       if (i >= n) { done = true }
       else {
         val c = html.charAt(i)
@@ -368,14 +343,14 @@ object HtmlTokenizer {
         } else {
           // attribute
           val aStart = i
-          while (i < n && { val ch = html.charAt(i); !ch.isWhitespace && ch != '=' && ch != '>' && ch != '/' }) i += 1
+          while (i < n && { val ch = html.charAt(i); !isSpace(ch) && ch != '=' && ch != '>' && ch != '/' }) i += 1
           val aLen = i - aStart
           val isId = aLen == 2 && html.regionMatches(true, aStart, "id", 0, 2)
           val isCls = aLen == 5 && html.regionMatches(true, aStart, "class", 0, 5)
-          while (i < n && html.charAt(i).isWhitespace) i += 1
+          while (i < n && isSpace(html.charAt(i))) i += 1
           if (i < n && html.charAt(i) == '=') {
             i += 1
-            while (i < n && html.charAt(i).isWhitespace) i += 1
+            while (i < n && isSpace(html.charAt(i))) i += 1
             if (i < n) {
               val q = html.charAt(i)
               if (q == '"' || q == '\'') {
@@ -392,7 +367,7 @@ object HtmlTokenizer {
                 }
               } else {
                 val vStart = i
-                while (i < n && { val ch = html.charAt(i); !ch.isWhitespace && ch != '>' }) i += 1
+                while (i < n && { val ch = html.charAt(i); !isSpace(ch) && ch != '>' }) i += 1
                 if (isId) id = decodeEntities(html.substring(vStart, i))
                 if (isCls) cls = decodeEntities(html.substring(vStart, i))
               }
@@ -402,7 +377,6 @@ object HtmlTokenizer {
       }
     }
     // unterminated tag at EOF is still emitted (old behavior)
-    res.name = name
     res.id = id
     res.cls = cls
     res.selfClosing = selfClosing

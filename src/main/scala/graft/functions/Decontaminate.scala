@@ -96,15 +96,14 @@ object Decontaminate {
     require(n > 0, s"n must be positive, got $n")
     val ngramUdf = udf((t: String) => wordNgramHashes(t, n))
     // ONE exploded benchmark frame feeds both the size gate and the join
-    // build (round-5 advice: the unshared frames ran the n-gram UDF over
-    // the benchmark twice). The persist is bounded by the benchmark's
-    // exploded n-grams (8-byte rows) and is materialized HERE by the gate
-    // action — note this call therefore triggers a Spark job; it stays
-    // cached for the caller's execution of the returned (lazy) frame and
-    // is evicted LRU like any bounded cache when the session needs room.
+    // build. It is not cached: the gate's action (this call triggers a
+    // Spark job) and the caller's execution of the returned lazy frame
+    // each run the n-gram UDF over the benchmark, which is small by
+    // nature. A persist here could never be released — the caller, not
+    // this function, executes the frame — so every call left an RDD
+    // cached for the rest of the session.
     val benchNgrams = benchmark
       .select(explode(ngramUdf(col(benchTextCol))).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val benchHashes = benchNgrams.distinct()
     val estHashes = benchNgrams
       .agg(approx_count_distinct(col("h"), 0.02)).first.getLong(0)

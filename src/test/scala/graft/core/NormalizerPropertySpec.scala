@@ -56,4 +56,21 @@ class NormalizerPropertySpec extends AnyFunSuite {
       }
     }
   }
+
+  test("assembleBlocks == assemble over normalizeBlock (+ bidiVisual for RTL), empties dropped (2000 samples)") {
+    val rng = new Random(2718)
+    val cfg = ExtractorConfig.default
+    val kinds = Array(BlockKind.Content, BlockKind.Heading, BlockKind.List)
+    (1 to 2000).foreach { k =>
+      val lang = if (rng.nextInt(4) == 0) "he" else "en"
+      val blocks = (0 until rng.nextInt(8)).map { _ =>
+        Block(sample(rng), 1, 0, "p", 1, false, false, false) -> kinds(rng.nextInt(kinds.length))
+      }
+      val reference = assemble(blocks.map { case (b, kind) =>
+        val norm = normalizeBlock(b.text)
+        (if (lang == "he") bidiVisual(norm, rtlBase = true) else norm, kind)
+      }.filter(_._1.nonEmpty))
+      assert(assembleBlocks(blocks, cfg, lang) == reference, s"sample $k ($lang)")
+    }
+  }
 }

@@ -107,4 +107,22 @@ class DecontaminateSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     }
   }
+
+  test("contaminatedIds leaves no cached RDD behind; repeated calls agree") {
+    val s = spark; import s.implicits._
+    val bench = Seq((0L, "the secret evaluation question about spark catalyst rules"))
+      .toDF("doc_id", "text")
+    val corpus = Seq(
+      (10L, "this page quotes the secret evaluation question about spark somewhere"),
+      (11L, "question evaluation secret the about rules catalyst spark plans"),
+      (12L, "completely unrelated content with nothing shared at all today")
+    ).toDF("doc_id", "text")
+    val runs = (1 to 3).map { _ =>
+      Decontaminate.contaminatedIds(corpus, "doc_id", "text", bench, "text", n = 5)
+        .collect().map(_.getLong(0)).toSeq
+    }
+    assert(runs.forall(_ == Seq(10L)), s"runs=$runs")
+    assert(spark.sparkContext.getPersistentRDDs.isEmpty,
+      s"cached RDDs left behind: ${spark.sparkContext.getPersistentRDDs.values.mkString(", ")}")
+  }
 }

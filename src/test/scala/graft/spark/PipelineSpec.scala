@@ -168,4 +168,49 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select(spark_partition_id().as("pid")).distinct().count()
     assert(parts >= 4, s"hot host landed on only $parts partitions")
   }
+
+  test("ExtractJob.run's extracted write: one hash exchange on (host, salt), kernel map-side below it") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{MapPartitionsExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    object Plans extends AdaptiveSparkPlanHelper
+    val dir = java.nio.file.Files.createTempDirectory("graft_salted").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = plans.add(qe)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      // a full-sample estimate finds the ~30% host, so its keys are salted
+      ExtractJob.run(spark, Corpus.pages(spark, 400), dir,
+        ExtractPipeline.PipelineConfig(sampleFraction = 1.0))
+      def extractedWrite = plans.toArray(Array.empty[QueryExecution]).toSeq.filter(_.analyzed match {
+        case w: InsertIntoHadoopFsRelationCommand => w.outputPath.toString.endsWith("/extracted/run_id=0")
+        case _ => false
+      })
+      val deadline = System.nanoTime() + 30000000000L // listener events arrive asynchronously
+      while (extractedWrite.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(extractedWrite.length == 1, s"expected one extracted write, got ${extractedWrite.length}")
+      val plan = extractedWrite.head.executedPlan
+      val exchanges = Plans.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(exchanges.length == 1, s"expected exactly one exchange:\n$plan")
+      val keys = exchanges.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.map { case a: Attribute => a.name; case e => e.sql }
+        case other => fail(s"exchange is not hash-partitioned: $other\n$plan")
+      }
+      assert(keys == Seq("host", "salt"), s"exchange keys $keys:\n$plan")
+      val kernels = Plans.collect(plan) { case m: MapPartitionsExec => m }
+      assert(kernels.length == 1, s"expected one kernel MapPartitions:\n$plan")
+      assert(Plans.find(exchanges.head.child)(_ eq kernels.head).isDefined,
+        s"the kernel must run map-side, below the exchange:\n$plan")
+    } finally {
+      spark.listenerManager.unregister(listener)
+      graft.FsUtil.deleteRecursively(new java.io.File(dir))
+    }
+  }
 }
