@@ -1,7 +1,9 @@
 package graft.spark
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import graft.core.ExtractedRow
+import org.apache.spark.sql.{DataFrame, Encoders, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StructType}
 
 /** Committed, resumable extraction runs: extracted table + per-partition
   * lineage rows + a run-level checkpoint record.
@@ -16,7 +18,8 @@ import org.apache.spark.sql.functions._
   *                           per run: written to _tmp then renamed)
   *   lineage/run_id=N/     — one row per output partition: doc/byte counts +
   *                           failure taxonomy counts (the reference's
-  *                           per-page stats, main/segment.c:158-174, as data)
+  *                           per-page stats, main/segment.c:158-174, as data),
+  *                           aggregated by Spark, written by the driver
   *   _checkpoint/          — one row per committed run: run_id, source
   *                           fingerprint, counts, committed_at
   *
@@ -107,8 +110,8 @@ object ExtractJob {
     val observed = obs.get
 
     // lineage from the WRITTEN files (column-pruned re-read, never re-extracts)
-    val written = spark.read.parquet(extractedPath)
-    lineageAgg(written).write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run_id=$runId")
+    writeLineage(spark.read.schema(ExtractedSchema).parquet(extractedPath),
+      s"$outDir/lineage/run_id=$runId")
 
     // the salting audit (written even when empty, so readers see a stable
     // schema for every committed run) — driver-side parquet: the rows are
@@ -137,11 +140,28 @@ object ExtractJob {
     RunResult(runId, newDocs, newDocs)
   }
 
+  /** Schema of the `extracted/run_id=N` files: the kernel's row plus the
+    * writing task's `partition_id`. Every read of graft's own tables
+    * passes the schema it wrote: without one, `spark.read.parquet` infers
+    * it from the file footers in a Spark job of its own, on every call.
+    * A read that needs only some columns passes the FULL schema and then
+    * selects: the planner sizes a scan by the share of its row width that
+    * is selected, so a `url`-only schema sized the committed urls of the
+    * resume anti-join at the whole files' bytes (16.3 MB instead of 3.4
+    * MB), which turned the join into a sort-merge join that shuffled every
+    * pending page's html. */
+  val ExtractedSchema: StructType =
+    Encoders.product[ExtractedRow].schema.add("partition_id", IntegerType, nullable = false)
+
+  /** Schema of the `lineage/run_id=N` files, as Spark wrote them before
+    * [[MetaParquet.writeLineage]] took over (and as it still writes them). */
+  val LineageSchema: StructType = StructType.fromDDL(
+    "partition_id INT, doc_count BIGINT NOT NULL, bytes_in BIGINT, chars_out BIGINT, " +
+      "n_ok BIGINT, n_empty BIGINT, n_unsupported BIGINT, n_parse_error BIGINT, n_oversize BIGINT")
+
   /** Per-partition lineage rows over extracted output carrying a
     * `partition_id` column: doc/byte counts + the full failure taxonomy
-    * (the reference's per-page stats, main/segment.c:158-174, as data).
-    * Shared by the batch job and the streaming per-batch audit
-    * ([[graft.streaming.StreamingExtract.runWithLineage]]). */
+    * (the reference's per-page stats, main/segment.c:158-174, as data). */
   def lineageAgg(written: DataFrame): DataFrame =
     written
       .groupBy(col("partition_id"))
@@ -154,6 +174,18 @@ object ExtractJob {
         sum(when(col("failure") === "unsupported_payload", 1L).otherwise(0L)).as("n_unsupported"),
         sum(when(col("failure") === "parse_error", 1L).otherwise(0L)).as("n_parse_error"),
         sum(when(col("failure") === "oversize", 1L).otherwise(0L)).as("n_oversize"))
+
+  /** Aggregates `written` with [[lineageAgg]] and writes its rows to `dir`
+    * from the driver (one row per output partition, so a record, not a
+    * table: a Spark write of them cost a job and the commit protocol's
+    * round trips). Returns their doc total. Shared by [[run]], [[compact]]
+    * and the streaming per-batch audit
+    * ([[graft.streaming.StreamingExtract.runWithLineage]]). */
+  def writeLineage(written: DataFrame, dir: String): Long = {
+    val rows = lineageAgg(written).collect()
+    MetaParquet.writeLineage(dir, written.sparkSession.sparkContext.hadoopConfiguration, rows.toSeq)
+    rows.iterator.map(_.getAs[Long]("doc_count")).sum
+  }
 
   /** Compact every live committed run into ONE new run of target-sized
     * files — the parquet surrogate of Iceberg's `rewrite_data_files`
@@ -180,7 +212,7 @@ object ExtractJob {
     val store = new ParquetCheckpointStore(spark, outDir)
     val ids = store.committedRunIds()
     require(ids.nonEmpty, s"nothing to compact under $outDir")
-    val live = spark.read
+    val live = spark.read.schema(ExtractedSchema)
       .parquet(ids.map(id => s"$outDir/extracted/run_id=$id"): _*)
       .dropDuplicates("url")
       .drop("partition_id")
@@ -190,14 +222,11 @@ object ExtractJob {
     val writer = live.write.mode(SaveMode.Overwrite)
     (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
      else writer).parquet(path)
-    val lineage = lineageAgg(spark.read.parquet(path))
-    lineage.write.mode(SaveMode.Overwrite).parquet(s"$outDir/lineage/run_id=$runId")
-    // doc count from the (tiny) lineage table — no second scan of the
-    // compacted output (run() uses df.observe for the same reason);
-    // coalesce: sum over an EMPTY lineage table is null (all-empty runs),
-    // which must commit 0, not NPE mid-protocol (round-3 review finding)
-    val docs = spark.read.parquet(s"$outDir/lineage/run_id=$runId")
-      .agg(coalesce(sum("doc_count"), lit(0L))).first.getLong(0)
+    // doc count from the lineage rows — no second scan of the compacted
+    // output (run() uses df.observe for the same reason); an all-empty run
+    // has no lineage rows and commits 0
+    val docs = writeLineage(spark.read.schema(ExtractedSchema).parquet(path),
+      s"$outDir/lineage/run_id=$runId")
     store.commit(runId, docs, s"compaction:${ids.mkString("+")}")
     store.retire(ids)
     RunResult(runId, docs, 0L)
@@ -210,7 +239,7 @@ object ExtractJob {
       case ids if ids.isEmpty => spark.emptyDataFrame
       case ids =>
         val paths = ids.map(id => s"$outDir/extracted/run_id=$id")
-        spark.read.parquet(paths: _*).dropDuplicates("url")
+        spark.read.schema(ExtractedSchema).parquet(paths: _*).dropDuplicates("url")
     }
   }
 
@@ -218,7 +247,7 @@ object ExtractJob {
     val store = new ParquetCheckpointStore(spark, outDir)
     val ids = store.committedRunIds()
     if (ids.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(ids.map(id => s"$outDir/lineage/run_id=$id"): _*)
+    else spark.read.schema(LineageSchema).parquet(ids.map(id => s"$outDir/lineage/run_id=$id"): _*)
   }
 
   /** Salting-audit rows of every live committed run that has them
@@ -253,6 +282,9 @@ trait CheckpointStore {
     * its original id even after a compaction retired it). */
   def isCommitted(runId: Long): Boolean
   def committedUrls(): Option[DataFrame]
+  /** Records run `runId` as committed. `sourceFingerprint` must not be
+    * null: it names the input snapshot (or `compaction:<ids>`, which
+    * retires those runs), and readers treat a missing one as "". */
   def commit(runId: Long, docCount: Long, sourceFingerprint: String): Unit
   /** Mark runs as superseded by a compaction (Iceberg: snapshot expiry). */
   def retire(runIds: Seq[Long]): Unit
@@ -325,11 +357,12 @@ final class ParquetCheckpointStore(spark: SparkSession, outDir: String) extends 
   override def committedUrls(): Option[DataFrame] = {
     val ids = committedRunIds()
     if (ids.isEmpty) None
-    else Some(spark.read.parquet(ids.map(id => s"$outDir/extracted/run_id=$id"): _*)
-      .select("url"))
+    else Some(spark.read.schema(ExtractJob.ExtractedSchema)
+      .parquet(ids.map(id => s"$outDir/extracted/run_id=$id"): _*).select("url"))
   }
 
   override def commit(runId: Long, docCount: Long, sourceFingerprint: String): Unit = {
+    require(sourceFingerprint != null, s"run_id=$runId: the source fingerprint must not be null")
     // the store is SINGLE-WRITER by design (like an Iceberg catalog without
     // a lock service); this recheck turns the worst outcome of two racing
     // drivers — both allocating the same run_id via nextRunId() and silently

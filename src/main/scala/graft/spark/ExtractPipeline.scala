@@ -147,9 +147,15 @@ object ExtractPipeline {
     * (the ACTUAL split count of the sampled frame, not the target
     * partition argument — ADVICE r4: an input with many more splits than
     * the target exceeded the documented global bound), the counting stays
-    * a distributed aggregation, and the driver collects only hosts ABOVE
-    * the threshold — mathematically ≤ floor(1/hotHostFraction) rows,
-    * never the full host census. */
+    * a distributed aggregation, and the driver collects only the
+    * ⌈1/hotHostFraction⌉ most frequent hosts, never the full host census:
+    * fewer than 1/f hosts can each hold more than a fraction f of the
+    * total, so those rows hold every hot host. The total rides the same
+    * aggregation as an observed metric, and the threshold is applied on
+    * the driver with the arithmetic Spark's column expressions used
+    * (`count > total * f`, `count / total` in doubles). With f ≤ 0 every
+    * sampled host is hot, and when ⌈1/f⌉ exceeds `maxSampleRows` (about
+    * the sample size) the top-k is skipped and every host is collected. */
   def hotHostEstimates(
       spark: SparkSession, pages: DataFrame, cfg: PipelineConfig): Seq[(String, Double)] = {
     import spark.implicits._
@@ -168,14 +174,22 @@ object ExtractPipeline {
         maxRows / math.max(1, org.apache.spark.TaskContext.get().numPartitions()))
       it.take(cap)
     }
+    val obs = org.apache.spark.sql.Observation("hot_host_sample")
     val counts = sample.toDF("url")
       .select(hostCol(col("url")).as("host"))
       .groupBy("host").count()
-    val total = broadcast(counts.agg(sum("count").as("_total")))
-    counts.crossJoin(total)
-      .filter(col("count") > col("_total") * cfg.hotHostFraction)
-      .select(col("host"), (col("count") / col("_total")).as("est_fraction"))
-      .collect().map(r => (r.getString(0), r.getDouble(1))).sortBy(_._1).toSeq
+      .observe(obs, sum("count").as("total"))
+    val f = cfg.hotHostFraction
+    val topK = if (f > 0) math.ceil(1 / f) else Double.PositiveInfinity
+    val top = (if (topK <= cfg.maxSampleRows) counts.orderBy(desc("count")).limit(topK.toInt)
+               else counts).collect()
+    if (top.isEmpty) Seq.empty // empty sample: the observed total is null
+    else {
+      val total = obs.get("total").asInstanceOf[Long].toDouble
+      top.toSeq.map(r => (r.getString(0), r.getLong(1).toDouble))
+        .collect { case (h, c) if c > total * f => (h, c / total) }
+        .sortBy(_._1)
+    }
   }
 
   def hotHosts(spark: SparkSession, pages: DataFrame, cfg: PipelineConfig): Set[String] =

@@ -9,9 +9,11 @@ import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.Row
 
 /** Driver-side parquet I/O for the few-row METADATA tables of the commit
-  * protocol (`_checkpoint`, `_retired`, the per-run `hot_hosts` audit).
+  * protocol (`_checkpoint`, `_retired`, the per-run `hot_hosts` audit and
+  * `lineage` rows).
   *
   * Why not Spark (round-6 optimization, guide §5 "the driver should do
   * almost no data work" — and its dual: Spark should do no DRIVER work):
@@ -33,7 +35,10 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   *    mixed histories) read identically.
   * Writes append a uniquely-named `part-<uuid>.parquet` (never clobbering
   * concurrent history); "overwrite" semantics delete the directory first,
-  * exactly like the SaveMode.Overwrite they replace. */
+  * exactly like the SaveMode.Overwrite they replace. The layout is flat:
+  * a metadata dir holding a visible subdirectory fails every read, because
+  * skipping it would read the table as partly empty (and a `_checkpoint`
+  * read that way would let `nextRunId` hand out a committed id again). */
 object MetaParquet {
 
   private val checkpointSchema: MessageType = MessageTypeParser.parseMessageType(
@@ -55,6 +60,21 @@ object MetaParquet {
       |  optional binary host (UTF8);
       |  optional double est_fraction;
       |  required boolean salted;
+      |}""".stripMargin)
+
+  // the schema Spark gave the lineage rows (ExtractJob.LineageSchema): the
+  // group key read back from parquet is nullable, count() is not, sums are
+  private val lineageSchema: MessageType = MessageTypeParser.parseMessageType(
+    """message spark_schema {
+      |  optional int32 partition_id;
+      |  required int64 doc_count;
+      |  optional int64 bytes_in;
+      |  optional int64 chars_out;
+      |  optional int64 n_ok;
+      |  optional int64 n_empty;
+      |  optional int64 n_unsupported;
+      |  optional int64 n_parse_error;
+      |  optional int64 n_oversize;
       |}""".stripMargin)
 
   private def fs(dir: String, conf: Configuration): FileSystem =
@@ -87,18 +107,24 @@ object MetaParquet {
       throw new java.io.IOException(s"rename $tmp -> $fin failed")
   }
 
-  /** Every data file of a metadata dir (skips _SUCCESS and hidden files);
-    * empty when the dir does not exist. */
+  /** Every data file of a metadata dir (skips _SUCCESS and hidden files
+    * and dirs, such as a `_temporary` left by a Spark write); empty when
+    * the dir does not exist. A visible subdirectory breaks the flat layout
+    * and fails loudly. */
   private def dataFiles(dir: String, conf: Configuration): Seq[Path] = {
     val f = fs(dir, conf)
     val p = new Path(dir)
     if (!f.exists(p)) Seq.empty
     else f.listStatus(p).toSeq
-      .filter(_.isFile)
-      .map(_.getPath)
-      .filterNot { fp =>
-        val n = fp.getName
+      .filterNot { st =>
+        val n = st.getPath.getName
         n.startsWith("_") || n.startsWith(".")
+      }
+      .map { st =>
+        if (!st.isFile)
+          throw new java.io.IOException(
+            s"${st.getPath} is a directory: metadata dir $dir must hold only files")
+        st.getPath
       }
   }
 
@@ -111,7 +137,9 @@ object MetaParquet {
       } finally r.close()
     }
 
-  /** (run_id, source_fingerprint) of every committed run. */
+  /** (run_id, source_fingerprint) of every committed run; a missing
+    * fingerprint reads as "" (writers never omit it: see
+    * [[CheckpointStore.commit]]). */
   def readCheckpoint(dir: String, conf: Configuration): Array[(Long, String)] = {
     val out = Array.newBuilder[(Long, String)]
     foreachRow(dir, conf) { g =>
@@ -150,15 +178,22 @@ object MetaParquet {
     }
   }
 
-  /** Overwrite the per-run salting-audit table (written even when empty so
-    * readers see a stable schema for every committed run — the
+  /** Replaces `dir` with one file of `rows` — written even when empty, so
+    * readers see a stable schema for every committed run (the
     * SaveMode.Overwrite + empty-Dataset contract it replaces). */
-  def writeHotHosts(
-      dir: String, conf: Configuration, rows: Seq[ExtractJob.HotHostRow]): Unit = {
+  private def overwriteFile(
+      dir: String, schema: MessageType, conf: Configuration)(
+      rows: SimpleGroupFactory => Iterator[Group]): Unit = {
     val f = fs(dir, conf)
     val p = new Path(dir)
     if (f.exists(p)) f.delete(p, true)
-    writeFile(dir, hotHostSchema, conf) { gf =>
+    writeFile(dir, schema, conf)(rows)
+  }
+
+  /** Overwrite the per-run salting-audit table. */
+  def writeHotHosts(
+      dir: String, conf: Configuration, rows: Seq[ExtractJob.HotHostRow]): Unit =
+    overwriteFile(dir, hotHostSchema, conf) { gf =>
       rows.iterator.map { r =>
         val g = gf.newGroup()
         g.add("run_id", r.run_id)
@@ -168,5 +203,20 @@ object MetaParquet {
         g
       }
     }
-  }
+
+  /** Overwrite a run's lineage table with the collected rows of
+    * [[ExtractJob.lineageAgg]], read by column name. */
+  def writeLineage(dir: String, conf: Configuration, rows: Seq[Row]): Unit =
+    overwriteFile(dir, lineageSchema, conf) { gf =>
+      rows.iterator.map { r =>
+        val g = gf.newGroup()
+        if (!r.isNullAt(r.fieldIndex("partition_id")))
+          g.add("partition_id", r.getAs[Int]("partition_id"))
+        (1 until lineageSchema.getFieldCount).foreach { i =>
+          val name = lineageSchema.getFieldName(i)
+          if (!r.isNullAt(r.fieldIndex(name))) g.add(name, r.getAs[Long](name))
+        }
+        g
+      }
+    }
 }

@@ -34,6 +34,12 @@ object ProductionPipeline {
       onStage(label, (System.nanoTime() - t0) / 1e9)
       r
     }
+    // commits a stage's frame as a table and reads it back with the schema
+    // just written (schema inference would be one more job per read)
+    def staged(df: DataFrame, name: String): DataFrame = {
+      df.hint("rebalance").write.mode("overwrite").parquet(s"$dir/$name")
+      s.read.schema(df.schema).parquet(s"$dir/$name")
+    }
     try {
       // stage 1: committed extraction with mid-pipeline resume
       val (r2, web) = stage("extract+resume") {
@@ -57,33 +63,29 @@ object ProductionPipeline {
       // observed count of written rows is the same number)
       val (ingested, extractedOk) = stage("ingest") {
         val obs = org.apache.spark.sql.Observation("x33_ingest")
-        web.unionByName(boiler).observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_ingested")
-        val t = s.read.parquet(s"$dir/stage_ingested")
+        val t = staged(web.unionByName(boiler).observe(obs, count(lit(1)).as("n")),
+          "stage_ingested")
         // web docs = staged rows minus the second source
         (t, obs.get("n").asInstanceOf[Long] - n / 2)
       }
       // stage 3: line-level dedup, staged through a table
       val (cleaned, linesRemoved) = stage("line-dedup") {
         val obs = org.apache.spark.sql.Observation("x33_linededup")
-        Dedup.dropBoilerplateLines(ingested, "url", "text", minDocs = 5)
-          .observe(obs, coalesce(sum("lines_removed"), lit(0L)).as("removed"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_line_dedup")
-        (s.read.parquet(s"$dir/stage_line_dedup"),
-          obs.get("removed").asInstanceOf[Long])
+        val t = staged(Dedup.dropBoilerplateLines(ingested, "url", "text", minDocs = 5)
+          .observe(obs, coalesce(sum("lines_removed"), lit(0L)).as("removed")),
+          "stage_line_dedup")
+        (t, obs.get("removed").asInstanceOf[Long])
       }
       // stage 4: exact dedup on cleaned text; long doc ids by url hash
       // (the documented re-key for the integral-id cap/pack carriers)
       val (corpus, corpusCount) = stage("exact-dedup") {
         val obs = org.apache.spark.sql.Observation("x33_exact")
-        Dedup.exactDedup(
+        val t = staged(Dedup.exactDedup(
             cleaned.select(col("id").as("url"), col("clean_text").as("text")),
             "url", "text")
           .withColumn("id", xxhash64(col("url")))
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_exact")
-        (s.read.parquet(s"$dir/stage_exact"),
-          obs.get("n").asInstanceOf[Long])
+          .observe(obs, count(lit(1)).as("n")), "stage_exact")
+        (t, obs.get("n").asInstanceOf[Long])
       }
       // stage 5: incremental near-dup — id-parity split, committed half
       // indexed (bucketed), fresh half probed, near-dups dropped.
@@ -94,6 +96,8 @@ object ProductionPipeline {
       // while real near-dups still collide
       val committed = corpus.filter(pmod(col("id"), lit(2)) === 0)
       val fresh = corpus.filter(pmod(col("id"), lit(2)) === 1)
+      // the held-out eval slice of stage 6 (its size is reported as bench_docs)
+      val isBench = pmod(col("id"), lit(17)) === 3
       var benchDocs = 0L // observed during the survivor write below
       val (nearDropped, survivors) = stage("neardup-probe") {
         Dedup.writeMinhashIndex(committed, "id", "text", tbl,
@@ -105,35 +109,29 @@ object ProductionPipeline {
         // re-execute the probe through the anti-join's lineage on every
         // action (measured 3x: decontaminate, its write, the report)
         val obs = org.apache.spark.sql.Observation("x33_neardup")
-        Dedup.probeMinhashIndex(fresh, "id", "text", tbl,
+        val nearDupIds = staged(Dedup.probeMinhashIndex(fresh, "id", "text", tbl,
             committed, shingleK = 7, bands = 16, rowsPerBand = 4, threshold = 0.35)
           .select(col("new_id").as("id")).distinct()
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_neardup_ids")
-        val nearDupIds = s.read.parquet(s"$dir/stage_neardup_ids")
+          .observe(obs, count(lit(1)).as("n")), "stage_neardup_ids")
         // the report's bench_docs count rides this write via observe
         // (round-6: survivors ≡ the written rows, and the later
         // bench.count() re-scanned the staged table for one number)
         val obsSurv = org.apache.spark.sql.Observation("x33_surv")
-        committed.unionByName(fresh.join(nearDupIds, Seq("id"), "left_anti"))
-          .observe(obsSurv, coalesce(sum(when(
-            pmod(col("id"), lit(17)) === 3, 1L).otherwise(0L)), lit(0L)).as("bench_docs"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_neardup")
+        val t = staged(committed.unionByName(fresh.join(nearDupIds, Seq("id"), "left_anti"))
+          .observe(obsSurv, coalesce(sum(when(isBench, 1L).otherwise(0L)), lit(0L)).as("bench_docs")),
+          "stage_neardup")
         benchDocs = obsSurv.get("bench_docs").asInstanceOf[Long]
-        (obs.get("n").asInstanceOf[Long], s.read.parquet(s"$dir/stage_neardup"))
+        (obs.get("n").asInstanceOf[Long], t)
       }
       // stage 6: decontamination against a held-out eval slice
-      val bench = survivors.filter(pmod(col("id"), lit(17)) === 3)
-      val train = survivors.filter(pmod(col("id"), lit(17)) =!= 3)
+      val bench = survivors.filter(isBench)
+      val train = survivors.filter(!isBench)
       val (deconDropped, decon) = stage("decontaminate") {
         val obs = org.apache.spark.sql.Observation("x33_decon")
-        Decontaminate.contaminatedIds(train, "id", "text", bench, "text", n = 4)
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_decon_ids")
-        val contam = s.read.parquet(s"$dir/stage_decon_ids")
-        train.join(contam.select(col("id")), Seq("id"), "left_anti")
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_decon")
-        (obs.get("n").asInstanceOf[Long], s.read.parquet(s"$dir/stage_decon"))
+        val contam = staged(Decontaminate.contaminatedIds(train, "id", "text", bench, "text", n = 4)
+          .observe(obs, count(lit(1)).as("n")), "stage_decon_ids")
+        val t = staged(train.join(contam.select(col("id")), Seq("id"), "left_anti"), "stage_decon")
+        (obs.get("n").asInstanceOf[Long], t)
       }
       // stage 7: LM perplexity filter (the CCNet third leg, x37's
       // operator composed): a char-bigram model trained on a hash sample
@@ -145,11 +143,9 @@ object ProductionPipeline {
         val lmModel = graft.functions.LanguageModel.trainCharBigramLm(
           decon, "id", "text", sampleRate = 0.5, maxPairs = 50000)
         val obs = org.apache.spark.sql.Observation("x33_lm")
-        graft.functions.LanguageModel.scoreBitsPerChar(decon, "id", "text", lmModel)
+        val dropIds = staged(graft.functions.LanguageModel.scoreBitsPerChar(decon, "id", "text", lmModel)
           .filter(col("bits_per_char") > 7.0).select("id")
-          .observe(obs, count(lit(1)).as("n"))
-          .hint("rebalance").write.mode("overwrite").parquet(s"$dir/stage_lm_ids")
-        val dropIds = s.read.parquet(s"$dir/stage_lm_ids")
+          .observe(obs, count(lit(1)).as("n")), "stage_lm_ids")
         (obs.get("n").asInstanceOf[Long], decon.join(dropIds, Seq("id"), "left_anti"))
       }
       // stage 8: training mix — language strata, hash sampling + cap

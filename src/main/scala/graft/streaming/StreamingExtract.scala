@@ -114,8 +114,7 @@ object StreamingExtract {
           val obs = org.apache.spark.sql.Observation(s"extract_batch_$batchId")
           df.observe(obs, count(lit(1)).as("n"))
             .write.mode("overwrite").parquet(s"$outDir/extracted/run_id=$batchId")
-          graft.spark.ExtractJob.lineageAgg(df)
-            .write.mode("overwrite").parquet(s"$outDir/lineage/run_id=$batchId")
+          graft.spark.ExtractJob.writeLineage(df, s"$outDir/lineage/run_id=$batchId")
           if (!store.isCommitted(batchId))
             store.commit(batchId, obs.get("n").asInstanceOf[Long], s"stream:batch=$batchId")
         } finally { df.unpersist(false); () }

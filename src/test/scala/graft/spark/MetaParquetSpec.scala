@@ -115,4 +115,100 @@ class MetaParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the multi-run union read (readHotHosts' shape) still resolves
     assert(spark.read.parquet(p0, p1).count() == 2)
   }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+    val all = java.nio.file.Files.walk(from)
+    try all.forEach { p =>
+      val t = to.resolve(from.relativize(p))
+      if (java.nio.file.Files.isDirectory(p)) java.nio.file.Files.createDirectories(t)
+      else java.nio.file.Files.copy(p, t)
+    } finally all.close()
+  }
+
+  private def fileSchema(dir: String) = {
+    val f = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-")).head
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toString), conf))
+    try r.getFooter.getFileMetaData.getSchema finally r.close()
+  }
+
+  test("lineage: MetaParquet-written, Spark-written and mixed stores read back identically") {
+    val meta = tmp("meta_lineage")
+    ExtractJob.run(spark, Corpus.pages(spark, 200), meta)
+    ExtractJob.run(spark, Corpus.pages(spark, 300), meta)
+    // the same runs with lineage written the way Spark wrote it before:
+    // all runs (an old store), and only run 1 (a store that spans the change)
+    def sparkWritten(runs: Seq[Int]): String = {
+      val d = tmp("spark_lineage")
+      copyTree(java.nio.file.Paths.get(meta), java.nio.file.Paths.get(d))
+      runs.foreach { id =>
+        ExtractJob.lineageAgg(spark.read.parquet(s"$d/extracted/run_id=$id"))
+          .write.mode("overwrite").parquet(s"$d/lineage/run_id=$id")
+      }
+      d
+    }
+    val old = sparkWritten(Seq(0, 1))
+    val mixed = sparkWritten(Seq(1))
+    assert(new java.io.File(s"$old/lineage/run_id=0/_SUCCESS").exists) // really Spark's
+    assert(fileSchema(s"$meta/lineage/run_id=0").getFields ==
+      fileSchema(s"$old/lineage/run_id=0").getFields)
+    def read(d: String) = {
+      val df = ExtractJob.readLineage(spark, d)
+      (df.schema, df.collect().map(_.toSeq).sortBy(r => (r(1).toString, r(0).toString)).toSeq)
+    }
+    val want = read(meta)
+    assert(want._2.map(_(1).asInstanceOf[Long]).sum == 300)
+    assert(read(old) == want)
+    assert(read(mixed) == want)
+    assert(spark.read.parquet(s"$meta/lineage/run_id=1").schema ==
+      spark.read.parquet(s"$old/lineage/run_id=1").schema)
+  }
+
+  test("lineage: a zero-row run still has a schema") {
+    val p = s"${tmp("meta_lineage_empty")}/lineage/run_id=0"
+    MetaParquet.writeLineage(p, conf, Seq.empty)
+    val df = spark.read.parquet(p)
+    assert(df.count() == 0)
+    assert(df.schema.map(f => (f.name, f.dataType)) ==
+      ExtractJob.LineageSchema.map(f => (f.name, f.dataType)))
+  }
+
+  test("lineage: a crash mid-write leaves only a hidden temp file") {
+    val p = s"${tmp("meta_lineage_crash")}/lineage/run_id=0"
+    val schema = ExtractJob.LineageSchema
+    val good = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array[Any](0, 5L, 100L, 80L, 4L, 1L, 0L, 0L, 0L), schema)
+    // a row without the taxonomy columns fails after the first row is written
+    val broken = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(
+      Array[Any](1, 5L), org.apache.spark.sql.types.StructType(schema.take(2)))
+    intercept[IllegalArgumentException](MetaParquet.writeLineage(p, conf, Seq(good, broken)))
+    val names = new java.io.File(p).listFiles().map(_.getName).toSeq
+    // the temp file (and its checksum) only: nothing a reader lists
+    assert(names.forall(_.startsWith(".")) && names.count(_.endsWith(".parquet.tmp")) == 1, names)
+    assert(spark.read.schema(schema).parquet(p).count() == 0)
+  }
+
+  test("a metadata dir with a visible subdirectory fails loudly; hidden ones are skipped") {
+    val dir = tmp("meta_nested")
+    val p = s"$dir/_checkpoint"
+    MetaParquet.appendCommit(p, conf, 0L, 10L, "fp", "2026-01-01T00:00:00Z")
+    MetaParquet.appendCommit(s"$p/_temporary", conf, 9L, 1L, "fp", "2026-01-01T00:00:00Z")
+    assert(MetaParquet.readCheckpoint(p, conf).toSeq == Seq((0L, "fp")))
+    // e.g. a commit record written with partitionBy: reading on as if the
+    // dir were flat would hide run 1, and nextRunId would hand it out again
+    MetaParquet.appendCommit(s"$p/run_id=1", conf, 1L, 10L, "fp", "2026-01-01T00:00:00Z")
+    val e = intercept[java.io.IOException](MetaParquet.readCheckpoint(p, conf))
+    assert(e.getMessage.contains("run_id=1"))
+    intercept[java.io.IOException](new ParquetCheckpointStore(spark, dir).nextRunId())
+  }
+
+  test("commit requires a source fingerprint") {
+    val dir = tmp("meta_nullfp")
+    val store = new ParquetCheckpointStore(spark, dir)
+    intercept[IllegalArgumentException](store.commit(0L, 1L, null))
+    assert(!new java.io.File(s"$dir/_checkpoint").exists)
+    store.commit(0L, 1L, "fp")
+    assert(new ParquetCheckpointStore(spark, dir).committedRunIds() == Seq(0L))
+  }
 }
